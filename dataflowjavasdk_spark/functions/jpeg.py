@@ -168,20 +168,6 @@ class _BitReader:
             self.pos += 1
             self.nbits += 8
 
-    def peek16(self) -> int:
-        self._fill(16)
-        if self.nbits >= 16:
-            return (self.buf >> (self.nbits - 16)) & 0xFFFF
-        return (self.buf << (16 - self.nbits)) & 0xFFFF  # zero-pad at EOS
-
-    def consume(self, k: int) -> None:
-        if self.nbits < k:
-            self._fill(k)
-            if self.nbits < k:
-                raise ValueError("truncated JPEG entropy stream")
-        self.nbits -= k
-        self.buf &= (1 << self.nbits) - 1
-
     def read_bits(self, n: int) -> int:
         if n == 0:
             return 0
@@ -195,8 +181,8 @@ class _BitReader:
         return v
 
     def read_symbol(self, lut: list) -> int:
-        """Fused peek16 + LUT probe + consume: one call per symbol
-        instead of three (peek16/_fill/consume), same bit semantics —
+        """Fused 16-bit peek + LUT probe + consume: one call per symbol
+        instead of three, with the same bit semantics —
         the entropy decode's per-symbol dispatch cost halves (round 11,
         guide §4.2 'per-task work')."""
         nbits = self.nbits
@@ -268,15 +254,6 @@ def _huff_lut(table: dict[tuple[int, int], int]) -> list:
                 lut[base + i] = entry
         _LUT_CACHE[key] = lut
     return lut
-
-
-def _decode_symbol(r: _BitReader, lut: list) -> int:
-    entry = lut[r.peek16()]
-    if entry is None:
-        raise ValueError("invalid Huffman code in JPEG stream")
-    sym, length = entry
-    r.consume(length)
-    return sym
 
 
 def _extend(v: int, t: int) -> int:

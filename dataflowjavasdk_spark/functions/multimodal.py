@@ -1475,19 +1475,6 @@ def extract_features_deadletter(
     )
 
 
-def image_features_payload(payload: bytes) -> dict:
-    """Per-payload twin of extract_image_features for the dead-letter
-    wrapper: sniff + real decode + dims/luma/ahash."""
-    img = _decode_image(payload)
-    luma = _luma_plane(img)
-    return {
-        "width": img.shape[1],
-        "height": img.shape[0],
-        "mean_luma": float(luma.mean()),
-        "phash": _ahash_any_dims(luma),
-    }
-
-
 def _le_int(payload_col: str, offset: int, nbytes: int):
     """Little-endian unsigned int from binary bytes [offset, offset+n)
     (1-indexed), as a pure JVM expression: per-byte hex slices

@@ -317,7 +317,8 @@ def simhash64_udf():
                     memo[t] = h
                 ap(h)
             hs = np.array(vals, dtype=np.uint64)
-            bits = np.unpackbits(hs.view(np.uint8)).reshape(-1, 64)
+            # explicit '<u8': the column weights assume little-endian bytes
+            bits = np.unpackbits(hs.astype("<u8", copy=False).view(np.uint8)).reshape(-1, 64)
             ones = bits.sum(axis=0, dtype=np.int64)
             majority = (2 * ones) > len(vals)
             out[i] = (

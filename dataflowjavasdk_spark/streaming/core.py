@@ -293,16 +293,6 @@ def streaming_curation_capstone(
     return write_stream_tfrecord(records, out_dir, checkpoint)
 
 
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """CountingInput.unbounded().withRate(...) (historical
-    sdk/io/CountingInput.java): synthetic unbounded sequence."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-
-
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     """Event-time watermark. Deviation vs reference (documented): Spark's
     watermark is a user-declared max-delay heuristic; Dataflow's is
