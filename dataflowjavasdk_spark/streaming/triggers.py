@@ -7,7 +7,8 @@ PaneInfoTracker.java; triggers under sdk/transforms/windowing/:
 AfterWatermark, AfterPane.elementCountAtLeast, AfterProcessingTime,
 Repeatedly, AfterFirst, AfterAll — Dataflow VLDB 2015 §2.3-2.4).
 
-Model implemented per (key, window):
+Model implemented per key, each window a cell (namespace) of the key's
+state:
 - buffered accumulators (count + sum v1) ≡ SystemReduceFn state
 - a trigger state machine deciding when panes fire
 - PaneInfo synthesis: timing EARLY/ON_TIME/LATE, pane_index,
@@ -17,13 +18,15 @@ Model implemented per (key, window):
   beyond it state is garbage-collected and stragglers are dropped
   (identical to the reference's lateness contract)
 
-Execution: one stateful shuffle on (key, window-start); per micro-batch
-each key-group gets its new rows (Arrow batches) + its GroupState;
-event-time timeouts fire when the watermark passes window end (on-time
-pane) and window end + lateness (cleanup). Scale: state is per
-(key,window) and bounded by lateness GC — the same bound Windmill
-enforces; swap the state store to RocksDB for large key spaces
-(session.py note).
+Execution: one stateful shuffle on the key; per micro-batch each key
+group gets its new rows (Arrow batches) + its GroupState, and one
+trigger step (`_trigger_step`, shared by the fixed/sliding and the
+session kernel) walks all of the key's windows, as ReduceFnRunner does.
+The key's one event-time timeout is its earliest window deadline: the
+watermark passing a window end (on-time pane) or window end + lateness
+(cleanup). Scale: state is per key, holding its open windows, and
+bounded by lateness GC — the same bound Windmill enforces; swap the
+state store to RocksDB for large key spaces (session.py note).
 
 Semantic deviations (documented, SURVEY.md §7.2):
 - processing-time triggers evaluate at micro-batch boundaries, not
@@ -37,10 +40,11 @@ Semantic deviations (documented, SURVEY.md §7.2):
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable, Iterator
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 from time import time as _now
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -245,14 +249,6 @@ class AfterWatermark(Trigger):
 ACCUMULATING = "accumulating"
 DISCARDING = "discarding"
 
-_STATE_SCHEMA = (
-    "acc_count long, acc_sum double, pane_count long, pane_sum double, "
-    "pane_index long, on_time_fired boolean, dyn string, "
-    # OutputTimeFn accumulators (epoch ms; -1 = unset): min/max input ts
-    # over all accumulated elements and over the current pane only.
-    "acc_min_ts long, acc_max_ts long, pane_min_ts long, pane_max_ts long"
-)
-
 # OutputTimeFn policies (historical sdk/transforms/windowing/OutputTimeFn.java)
 OUTPUT_END_OF_WINDOW = "end_of_window"
 OUTPUT_EARLIEST = "earliest"
@@ -266,6 +262,204 @@ OUTPUT_LATEST = "latest"
 # window-closed signal.
 CLOSING_FIRE_IF_NON_EMPTY = "fire_if_non_empty"
 CLOSING_FIRE_ALWAYS = "fire_always"
+
+# One window's trigger/pane state under its key: the buffered accumulators
+# (count + sum ≡ SystemReduceFn state), the pane counters, and the
+# OutputTimeFn accumulators (epoch ms; -1 = unset) — min/max input ts over
+# all accumulated elements and over the current pane only. A live cell
+# also carries its window bounds (`start`, `end`, epoch ms) and the
+# trigger's dynamic state (`dyn`).
+_EMPTY_CELL = dict(
+    acc_n=0, acc_sum=0.0, pane_n=0, pane_sum=0.0, pane_idx=0,
+    on_time_fired=False, acc_min=-1, acc_max=-1, pane_min=-1, pane_max=-1,
+)
+
+
+def _min_ts(a: int, b: int) -> int:
+    """min of two timestamp accumulators where -1 means unset."""
+    return b if a < 0 else (a if b < 0 else min(a, b))
+
+
+def _out_schema(df: DataFrame, keys: list[str], output_time: str | None,
+                closing_behavior: str) -> str:
+    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
+    out_schema = (
+        f"{key_fields}, window_start timestamp, window_end timestamp, "
+        "n long, total double, pane_index long, pane_timing string, "
+        "is_first boolean, is_last boolean"
+    )
+    if output_time is not None:
+        if output_time not in (OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
+            raise ValueError(f"unknown output_time {output_time!r}")
+        out_schema += ", emit_ts timestamp"
+    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
+        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
+    return out_schema
+
+
+def _trigger_step(
+    keys: list[str],
+    trigger: AfterWatermark,
+    accumulation: str,
+    lateness_ms: int,
+    output_time: str | None,
+    closing_behavior: str,
+) -> Callable:
+    """The trigger step both kernels share — one key's pass of the
+    ReduceFnRunner over its windows (historical sdk/util/ReduceFnRunner.java
+    onTrigger + PaneInfoTracker + the GC timer).
+
+    `step(user_key, cells, state, field)` runs the trigger on every cell
+    (a window under the key, carrying `new_n` = elements folded in this
+    batch): EARLY panes while the Beam watermark is before the window end,
+    the ON_TIME pane once it reaches the end, LATE refinements within the
+    allowed lateness, and the closing pane at the lateness horizon, where
+    the cell is garbage-collected. The surviving cells are written back as
+    one JSON blob under `field`, and the key's one event-time timeout is
+    the earliest next deadline over them: the on-time point (end − lateness
+    on Spark's clock) or, once on-time has fired, the GC point (end).
+    Yields the panes as one DataFrame.
+    """
+    columns = [*keys, "window_start", "window_end", "n", "total", "pane_index",
+               "pane_timing", "is_first", "is_last"]
+    if output_time is not None:
+        columns.append("emit_ts")
+    # ACCUMULATING panes carry all accumulated elements, DISCARDING only
+    # the ones since the last firing.
+    acc = "acc" if accumulation == ACCUMULATING else "pane"
+    emit_ts_field = {OUTPUT_EARLIEST: acc + "_min", OUTPUT_LATEST: acc + "_max"}.get(output_time)
+    early, late = trigger.early, trigger.late
+
+    def emit(panes: list, user_key: tuple, c: dict, timing: str, is_last: bool) -> None:
+        pane = [*user_key, pd.Timestamp(c["start"], unit="ms"),
+                pd.Timestamp(c["end"], unit="ms"), c[acc + "_n"], c[acc + "_sum"],
+                c["pane_idx"], timing, c["pane_idx"] == 0, is_last]
+        if output_time is not None:
+            # END_OF_WINDOW = window end − 1 ms (Beam's maxTimestamp)
+            ms = c["end"] - 1 if emit_ts_field is None else c[emit_ts_field]
+            pane.append(pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT)
+        panes.append(pane)
+        c["pane_idx"] += 1
+        c["pane_n"], c["pane_sum"], c["pane_min"], c["pane_max"] = 0, 0.0, -1, -1
+
+    def step(user_key: tuple, cells: list[dict], state, field: str) -> Iterator[pd.DataFrame]:
+        spark_wm = state.getCurrentWatermarkMs()
+        watermark_ms = spark_wm + lateness_ms  # the Beam-true watermark
+        now_ms = int(_now() * 1000)
+        panes: list = []
+        keep: list[dict] = []
+        for c in cells:
+            new_n = c.pop("new_n", 0)
+            dyn = c["dyn"]
+            if watermark_ms < c["end"]:
+                # speculative EARLY panes
+                if early is not None and new_n:
+                    early.on_elements(dyn, "e", new_n, now_ms)
+                    if early.should_fire(dyn, "e", now_ms):
+                        early.on_fire(dyn, "e")
+                        emit(panes, user_key, c, "EARLY", is_last=False)
+                keep.append(c)
+                continue
+            final_horizon = watermark_ms >= c["end"] + lateness_ms
+            emitted_closing = False
+            if not c["on_time_fired"]:
+                # ON_TIME: the watermark reached the window end
+                emit(panes, user_key, c, "ON_TIME", is_last=final_horizon)
+                c["on_time_fired"] = True
+                emitted_closing = final_horizon
+            elif new_n:
+                # refinements within the lateness horizon
+                fire_late = True
+                if late is not None:
+                    late.on_elements(dyn, "l", new_n, now_ms)
+                    fire_late = late.should_fire(dyn, "l", now_ms)
+                    if fire_late:
+                        late.on_fire(dyn, "l")
+                if fire_late:
+                    emit(panes, user_key, c, "LATE", is_last=final_horizon)
+                    emitted_closing = final_horizon
+            if not final_horizon:
+                keep.append(c)  # still refinable within lateness
+            elif not emitted_closing and (
+                closing_behavior == CLOSING_FIRE_ALWAYS or c["pane_n"]
+            ):
+                # Closing pane at the lateness horizon. FIRE_ALWAYS: emit
+                # even though nothing new arrived since the last firing
+                # (empty under DISCARDING, the running totals under
+                # ACCUMULATING) — the guaranteed is_last window-closed
+                # signal. Default FIRE_IF_NON_EMPTY: emit iff the pane holds
+                # data not yet fired — e.g. a late element buffered by an
+                # unready late trigger (AfterCount(2) with one arrival);
+                # Beam fires the final pane whenever there is new data
+                # since the last firing, so dropping it here would lose
+                # the element's contribution forever.
+                emit(panes, user_key, c, "LATE", is_last=True)
+
+        if keep:
+            state.update((json.dumps({field: keep}),))
+            state.setTimeoutTimestamp(max(
+                min(c["end"] if c["on_time_fired"] else c["end"] - lateness_ms
+                    for c in keep),
+                spark_wm + 1,
+            ))
+        elif state.exists:
+            state.remove()
+        if panes:
+            yield pd.DataFrame(panes, columns=columns)
+
+    return step
+
+
+def _window_kernel(step: Callable, ts_col: str) -> Callable:
+    """The applyInPandasWithState function of `triggered_window_aggregate`:
+    one call per key per micro-batch. Rows arrive with their window bounds
+    (`__ws__`/`__we__`, epoch ms); each window is a cell of the key's state.
+    """
+
+    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        cells = json.loads(state.get[0])["cells"] if state.exists else []
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        if frames:
+            pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+            # fold the batch into per-window partials
+            starts, first, inv = np.unique(
+                pdf["__ws__"].to_numpy(), return_index=True, return_inverse=True
+            )
+            v = pdf["__v__"].to_numpy(dtype=np.float64)
+            counts = np.bincount(inv)
+            sums = np.bincount(inv, weights=np.where(np.isnan(v), 0.0, v))
+            t = pdf[ts_col].to_numpy().astype("datetime64[ms]").astype(np.int64)
+            lo = np.full(len(starts), np.iinfo(np.int64).max)
+            hi = np.full(len(starts), -1)
+            np.minimum.at(lo, inv, t)
+            np.maximum.at(hi, inv, t)
+            ends = pdf["__we__"].to_numpy()[first]
+            spark_wm = state.getCurrentWatermarkMs()
+            by_start = {c["start"]: c for c in cells}
+            for i, start in enumerate(starts.tolist()):
+                c = by_start.get(start)
+                if c is None:
+                    end = int(ends[i])
+                    # GC horizon (true_wm >= end + lateness ⟺ spark_wm >=
+                    # end): stragglers are dropped — do not resurrect a
+                    # window the cleanup already removed.
+                    if spark_wm >= end:
+                        continue
+                    c = by_start[start] = dict(_EMPTY_CELL, start=start, end=end, dyn={})
+                n, lo_i, hi_i = int(counts[i]), int(lo[i]), int(hi[i])
+                c["new_n"] = n
+                c["acc_n"] += n
+                c["pane_n"] += n
+                c["acc_sum"] += float(sums[i])
+                c["pane_sum"] += float(sums[i])
+                c["acc_min"] = _min_ts(c["acc_min"], lo_i)
+                c["pane_min"] = _min_ts(c["pane_min"], lo_i)
+                c["acc_max"] = max(c["acc_max"], hi_i)
+                c["pane_max"] = max(c["pane_max"], hi_i)
+            cells = sorted(by_start.values(), key=lambda c: c["start"])
+        yield from step(key, cells, state, "cells")
+
+    return process
 
 
 def triggered_window_aggregate(
@@ -299,6 +493,18 @@ def triggered_window_aggregate(
     the pane's contents (all accumulated elements under ACCUMULATING,
     only the new ones under DISCARDING) — the reference's
     OutputTimeFn.outputAtEarliest/LatestInputTimestamp.
+
+    State is per key, each open window a cell under it (Windmill's keyed
+    state with the window as namespace), so each micro-batch calls the
+    kernel once per key, not once per (key, window), and the key's one
+    timeout is its earliest cell deadline. Every call runs the trigger on
+    all of the key's cells, so a window whose end the watermark has just
+    reached exactly fires its ON_TIME pane (and, at end + lateness, its
+    closing pane) whenever the key is called for another window in that
+    batch — Beam's rule, as the watermark has then passed the window's
+    maxTimestamp (end − 1 ms). Called for nothing else, the key waits for
+    its timeout, which Spark fires only once the watermark is strictly
+    past it, i.e. one watermark advance later.
     """
     lateness_ms = _duration_ms(allowed_lateness)
     # Spark's stateful operator drops input rows behind ITS watermark, but
@@ -310,23 +516,12 @@ def triggered_window_aggregate(
     #   true_wm = spark_wm + lateness
     # for all pane timing decisions.
     spark_delay_ms = _duration_ms(watermark_delay) + lateness_ms
-    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
-    out_schema = (
-        f"{key_fields}, window_start timestamp, window_end timestamp, "
-        "n long, total double, pane_index long, pane_timing string, "
-        "is_first boolean, is_last boolean"
-    )
-    if output_time is not None:
-        if output_time not in (OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
-            raise ValueError(f"unknown output_time {output_time!r}")
-        out_schema += ", emit_ts timestamp"
-    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
-        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
+    out_schema = _out_schema(df, keys, output_time, closing_behavior)
 
     # Window assignment: fixed (default) or sliding when window_period is
     # given (SlidingWindows.of(size).every(period)). Sliding uses Spark's
     # native multi-assign — the Expand is map-side and pipelined; each
-    # (key, window) then owns an independent trigger-kernel state cell,
+    # (key, window) then owns an independent cell of its key's state,
     # exactly Beam's per-window pane semantics over overlapping windows.
     window_expr = (
         F.window(ts_col, window_size)
@@ -338,8 +533,8 @@ def triggered_window_aggregate(
         .withColumn("__w__", window_expr)
         .select(
             *keys,
-            F.col("__w__.start").alias("window_start"),
-            F.col("__w__.end").alias("window_end"),
+            F.unix_millis(F.col("__w__.start")).alias("__ws__"),
+            F.unix_millis(F.col("__w__.end")).alias("__we__"),
             F.col(value_col).alias("__v__"),
             # keep the watermarked event-time column in the projection:
             # extracting window fields drops the watermark tag, and the
@@ -348,152 +543,12 @@ def triggered_window_aggregate(
             F.col(ts_col),
         )
     )
-
-    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        *user_key, w_start, w_end = key
-        w_end_ms = int(pd.Timestamp(w_end).timestamp() * 1000)
-        spark_wm = state.getCurrentWatermarkMs()
-        watermark_ms = spark_wm + lateness_ms  # the Beam-true watermark
-        now_ms = int(_now() * 1000)
-
-        if state.exists:
-            (acc_n, acc_sum, pane_n, pane_sum, pane_idx, on_time_fired, dyn_json,
-             acc_min, acc_max, pane_min, pane_max) = state.get
-            dyn = json.loads(dyn_json)
-        else:
-            acc_n = pane_n = pane_idx = 0
-            acc_sum = pane_sum = 0.0
-            on_time_fired = False
-            dyn = {}
-            acc_min = pane_min = acc_max = pane_max = -1
-
-        new_n, new_sum = 0, 0.0
-        new_min, new_max = -1, -1
-        for pdf in pdfs:
-            if len(pdf):
-                new_n += len(pdf)
-                new_sum += float(pdf["__v__"].sum())
-                lo = int(pd.Timestamp(pdf[ts_col].min()).timestamp() * 1000)
-                hi = int(pd.Timestamp(pdf[ts_col].max()).timestamp() * 1000)
-                new_min = lo if new_min < 0 else min(new_min, lo)
-                new_max = max(new_max, hi)
-
-        # GC horizon: stragglers beyond window_end + lateness are dropped —
-        # do not resurrect state the cleanup timeout already removed.
-        if watermark_ms >= w_end_ms + lateness_ms and not state.exists:
-            return
-
-        acc_n += new_n
-        acc_sum += new_sum
-        pane_n += new_n
-        pane_sum += new_sum
-        if new_n:
-            acc_min = new_min if acc_min < 0 else min(acc_min, new_min)
-            acc_max = max(acc_max, new_max)
-            pane_min = new_min if pane_min < 0 else min(pane_min, new_min)
-            pane_max = max(pane_max, new_max)
-
-        panes: list[dict] = []
-
-        def _emit_ts(lo: int, hi: int):
-            if output_time == OUTPUT_END_OF_WINDOW:
-                ms = w_end_ms - 1
-            elif output_time == OUTPUT_EARLIEST:
-                ms = lo
-            else:
-                ms = hi
-            return pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT
-
-        def emit(timing: str, is_last: bool) -> None:
-            nonlocal pane_idx, pane_n, pane_sum, pane_min, pane_max
-            n, total = (acc_n, acc_sum) if accumulation == ACCUMULATING else (pane_n, pane_sum)
-            pane = dict(
-                zip(keys, user_key),
-                window_start=w_start,
-                window_end=w_end,
-                n=n,
-                total=total,
-                pane_index=pane_idx,
-                pane_timing=timing,
-                is_first=pane_idx == 0,
-                is_last=is_last,
-            )
-            if output_time is not None:
-                lo, hi = (
-                    (acc_min, acc_max)
-                    if accumulation == ACCUMULATING
-                    else (pane_min, pane_max)
-                )
-                pane["emit_ts"] = _emit_ts(lo, hi)
-            panes.append(pane)
-            pane_idx += 1
-            pane_n, pane_sum = 0, 0.0
-            pane_min, pane_max = -1, -1
-
-        before_end_of_window = watermark_ms < w_end_ms
-
-        if before_end_of_window:
-            # speculative EARLY panes
-            if trigger.early is not None and new_n:
-                trigger.early.on_elements(dyn, "e", new_n, now_ms)
-                if trigger.early.should_fire(dyn, "e", now_ms):
-                    trigger.early.on_fire(dyn, "e")
-                    emit("EARLY", is_last=False)
-            state.update((acc_n, acc_sum, pane_n, pane_sum, pane_idx, False,
-                          json.dumps(dyn), acc_min, acc_max, pane_min, pane_max))
-            # wake when the TRUE watermark passes the end of the window,
-            # i.e. when the Spark watermark reaches w_end - lateness
-            state.setTimeoutTimestamp(max(w_end_ms - lateness_ms, spark_wm + 1))
-        else:
-            final_horizon = watermark_ms >= w_end_ms + lateness_ms
-            emitted_closing = False
-            if not on_time_fired:
-                # ON_TIME: the watermark crossed window end (timeout or a
-                # batch carrying late-ish rows observed after crossing)
-                emit("ON_TIME", is_last=final_horizon)
-                on_time_fired = True
-                emitted_closing = final_horizon
-            elif new_n:
-                # refinements within the lateness horizon
-                fire_late = True
-                if trigger.late is not None:
-                    trigger.late.on_elements(dyn, "l", new_n, now_ms)
-                    fire_late = trigger.late.should_fire(dyn, "l", now_ms)
-                    if fire_late:
-                        trigger.late.on_fire(dyn, "l")
-                if fire_late:
-                    emit("LATE", is_last=final_horizon)
-                    emitted_closing = final_horizon
-            if final_horizon:
-                if not emitted_closing and (
-                    closing_behavior == CLOSING_FIRE_ALWAYS or pane_n
-                ):
-                    # Closing pane at the lateness horizon. FIRE_ALWAYS:
-                    # emit even though nothing new arrived since the last
-                    # firing (empty under DISCARDING, the running totals
-                    # under ACCUMULATING) — the guaranteed is_last
-                    # window-closed signal. Default FIRE_IF_NON_EMPTY:
-                    # emit iff the pane holds data not yet fired — e.g. a
-                    # late element buffered by an unready late trigger
-                    # (AfterCount(2) with one arrival); Beam fires the
-                    # final pane whenever there is new data since the
-                    # last firing, so dropping it here would lose the
-                    # element's contribution forever.
-                    emit("LATE", is_last=True)
-                state.remove()
-            else:
-                state.update((acc_n, acc_sum, pane_n, pane_sum, pane_idx, True,
-                              json.dumps(dyn), acc_min, acc_max, pane_min, pane_max))
-                # GC when true_wm reaches w_end + lateness ⟺ spark_wm reaches w_end
-                state.setTimeoutTimestamp(max(w_end_ms, spark_wm + 1))
-
-        if panes:
-            yield pd.DataFrame(panes)
-
-    return windowed.groupBy(*keys, "window_start", "window_end").applyInPandasWithState(
-        process,
+    step = _trigger_step(keys, trigger, accumulation, lateness_ms, output_time,
+                         closing_behavior)
+    return windowed.groupBy(*keys).applyInPandasWithState(
+        _window_kernel(step, ts_col),
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType="cells string",
         outputMode="update",
         timeoutConf="EventTimeTimeout",
     )
@@ -509,6 +564,81 @@ def _duration_ms(s: str) -> int:
         "day": 86_400_000, "days": 86_400_000,
     }[unit]
     return int(qty) * unit_ms
+
+
+def _merge_dyn(into: dict, other: dict) -> None:
+    """onMerge for trigger dynamic state: element counts add,
+    AfterProcessingTime's first-element stamp takes the earliest (Beam's
+    AfterDelayFromFirstElement combines with Min), AfterEach's position
+    takes the furthest, and a finished OrFinally stays finished."""
+    for k, v in other.items():
+        if k not in into:
+            into[k] = v
+        elif k.endswith(".c"):
+            into[k] += v
+        elif k.endswith(".first"):
+            into[k] = min(into[k], v)
+        elif k.endswith(".i"):
+            into[k] = max(into[k], v)
+        else:  # .done / .upending flags
+            into[k] = into[k] or v
+
+
+def _session_kernel(step: Callable, ts_col: str, gap_ms: int) -> Callable:
+    """The applyInPandasWithState function of `triggered_session_aggregate`:
+    one call per key per micro-batch over the key's open sessions."""
+
+    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        sessions: list[dict] = (
+            json.loads(state.get[0])["sessions"] if state.exists else []
+        )
+
+        # 1. fold new elements in as proto-sessions
+        for pdf in pdfs:
+            for ts_v, v in zip(pdf[ts_col], pdf["__v__"]):
+                t_ms = int(pd.Timestamp(ts_v).value // 1_000_000)
+                # Beam drop rule: data later than the lateness horizon
+                # relative to ITS OWN session end can't resurrect GC'd
+                # state; Spark's watermark already culled older rows.
+                sessions.append(
+                    dict(start=t_ms, end=t_ms + gap_ms, acc_n=1,
+                         acc_sum=float(v), pane_n=1, pane_sum=float(v),
+                         pane_idx=0, on_time_fired=False, dyn={},
+                         new_n=1,
+                         acc_min=t_ms, acc_max=t_ms,
+                         pane_min=t_ms, pane_max=t_ms)
+                )
+
+        # 2. merge: sort all intervals, union overlapping ones, merging
+        # accumulators and trigger state (onMerge: counts add, pane index
+        # continues from the max, on_time stays fired if any part fired).
+        sessions.sort(key=lambda s: (s["start"], s["end"]))
+        merged: list[dict] = []
+        for s in sessions:
+            if merged and s["start"] < merged[-1]["end"]:
+                m = merged[-1]
+                m["end"] = max(m["end"], s["end"])
+                m["acc_n"] += s["acc_n"]
+                m["acc_sum"] += s["acc_sum"]
+                m["pane_n"] += s["pane_n"]
+                m["pane_sum"] += s["pane_sum"]
+                m["pane_idx"] = max(m["pane_idx"], s["pane_idx"])
+                m["on_time_fired"] = m["on_time_fired"] or s["on_time_fired"]
+                m["new_n"] = m.get("new_n", 0) + s.get("new_n", 0)
+                # onMerge for OutputTimeFn holds: min/max across parts
+                # (-1 = unset pane accumulator after a discarding emit)
+                for lo_k in ("acc_min", "pane_min"):
+                    m[lo_k] = _min_ts(m[lo_k], s[lo_k])
+                for hi_k in ("acc_max", "pane_max"):
+                    m[hi_k] = max(m[hi_k], s[hi_k])
+                _merge_dyn(m["dyn"], s["dyn"])
+            else:
+                merged.append(s)
+
+        # 3. run the trigger per session; persist / GC / wake-up
+        yield from step(key, merged, state, "sessions")
+
+    return process
 
 
 def triggered_session_aggregate(
@@ -547,184 +677,16 @@ def triggered_session_aggregate(
     session's CURRENT end (end − 1 ms) at firing time, and
     EARLIEST/LATEST merge across fused sessions (onMerge takes min/max).
     """
-    gap_ms = _duration_ms(gap)
     lateness_ms = _duration_ms(allowed_lateness)
     spark_delay_ms = _duration_ms(watermark_delay) + lateness_ms
-    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
-    out_schema = (
-        f"{key_fields}, window_start timestamp, window_end timestamp, "
-        "n long, total double, pane_index long, pane_timing string, "
-        "is_first boolean, is_last boolean"
-    )
-    if output_time is not None:
-        if output_time not in (OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
-            raise ValueError(f"unknown output_time {output_time!r}")
-        out_schema += ", emit_ts timestamp"
-    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
-        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
-
+    out_schema = _out_schema(df, keys, output_time, closing_behavior)
     windowed = df.withWatermark(ts_col, f"{spark_delay_ms} milliseconds").select(
         *keys, F.col(value_col).alias("__v__"), F.col(ts_col)
     )
-
-    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        user_key = key
-        spark_wm = state.getCurrentWatermarkMs()
-        watermark_ms = spark_wm + lateness_ms  # Beam-true watermark
-        now_ms = int(_now() * 1000)
-
-        sessions: list[dict] = (
-            json.loads(state.get[0])["sessions"] if state.exists else []
-        )
-
-        # 1. fold new elements in as proto-sessions
-        new_protos: list[dict] = []
-        for pdf in pdfs:
-            for ts_v, v in zip(pdf[ts_col], pdf["__v__"]):
-                t_ms = int(pd.Timestamp(ts_v).value // 1_000_000)
-                # Beam drop rule: data later than the lateness horizon
-                # relative to ITS OWN session end can't resurrect GC'd
-                # state; Spark's watermark already culled older rows.
-                new_protos.append(
-                    dict(start=t_ms, end=t_ms + gap_ms, acc_n=1,
-                         acc_sum=float(v), pane_n=1, pane_sum=float(v),
-                         pane_idx=0, on_time_fired=False, dyn={},
-                         new_n=1,
-                         acc_min=t_ms, acc_max=t_ms,
-                         pane_min=t_ms, pane_max=t_ms)
-                )
-
-        # 2. merge: sort all intervals, union overlapping ones, merging
-        # accumulators and trigger state (onMerge: counts add, pane index
-        # continues from the max, on_time stays fired if any part fired).
-        for p in new_protos:
-            sessions.append(p)
-        sessions.sort(key=lambda s: (s["start"], s["end"]))
-        merged: list[dict] = []
-        for s in sessions:
-            if merged and s["start"] < merged[-1]["end"]:
-                m = merged[-1]
-                m["end"] = max(m["end"], s["end"])
-                m["acc_n"] += s["acc_n"]
-                m["acc_sum"] += s["acc_sum"]
-                m["pane_n"] += s["pane_n"]
-                m["pane_sum"] += s["pane_sum"]
-                m["pane_idx"] = max(m["pane_idx"], s["pane_idx"])
-                m["on_time_fired"] = m["on_time_fired"] or s["on_time_fired"]
-                m["new_n"] = m.get("new_n", 0) + s.get("new_n", 0)
-                # onMerge for OutputTimeFn holds: min/max across parts
-                # (-1 = unset pane accumulator after a discarding emit)
-                for lo_k in ("acc_min", "pane_min"):
-                    a, b = m.get(lo_k, -1), s.get(lo_k, -1)
-                    m[lo_k] = b if a < 0 else (a if b < 0 else min(a, b))
-                for hi_k in ("acc_max", "pane_max"):
-                    m[hi_k] = max(m.get(hi_k, -1), s.get(hi_k, -1))
-                # merge trigger dynamic state by summing counters
-                for dk, dv in s.get("dyn", {}).items():
-                    if isinstance(dv, (int, float)):
-                        m["dyn"][dk] = m["dyn"].get(dk, 0) + dv
-                    else:
-                        m["dyn"].setdefault(dk, dv)
-            else:
-                merged.append(s)
-        sessions = merged
-
-        panes: list[dict] = []
-
-        def emit(s: dict, timing: str, is_last: bool) -> None:
-            n, total = (
-                (s["acc_n"], s["acc_sum"])
-                if accumulation == ACCUMULATING
-                else (s["pane_n"], s["pane_sum"])
-            )
-            pane = dict(
-                zip(keys, user_key),
-                window_start=pd.Timestamp(s["start"], unit="ms"),
-                window_end=pd.Timestamp(s["end"], unit="ms"),
-                n=n,
-                total=total,
-                pane_index=s["pane_idx"],
-                pane_timing=timing,
-                is_first=s["pane_idx"] == 0,
-                is_last=is_last,
-            )
-            if output_time is not None:
-                if output_time == OUTPUT_END_OF_WINDOW:
-                    ms = s["end"] - 1
-                elif output_time == OUTPUT_EARLIEST:
-                    ms = (s.get("acc_min", -1) if accumulation == ACCUMULATING
-                          else s.get("pane_min", -1))
-                else:
-                    ms = (s.get("acc_max", -1) if accumulation == ACCUMULATING
-                          else s.get("pane_max", -1))
-                pane["emit_ts"] = pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT
-            panes.append(pane)
-            s["pane_idx"] += 1
-            s["pane_n"], s["pane_sum"] = 0, 0.0
-            s["pane_min"], s["pane_max"] = -1, -1
-
-        # 3. run the trigger per session
-        keep: list[dict] = []
-        for s in sessions:
-            new_n = s.pop("new_n", 0)
-            final_horizon = watermark_ms >= s["end"] + lateness_ms
-            if watermark_ms < s["end"]:
-                if trigger.early is not None and new_n:
-                    trigger.early.on_elements(s["dyn"], "e", new_n, now_ms)
-                    if trigger.early.should_fire(s["dyn"], "e", now_ms):
-                        trigger.early.on_fire(s["dyn"], "e")
-                        emit(s, "EARLY", is_last=False)
-                keep.append(s)
-            else:
-                emitted_closing = False
-                if not s["on_time_fired"]:
-                    emit(s, "ON_TIME", is_last=final_horizon)
-                    s["on_time_fired"] = True
-                    emitted_closing = final_horizon
-                elif new_n:
-                    fire_late = True
-                    if trigger.late is not None:
-                        trigger.late.on_elements(s["dyn"], "l", new_n, now_ms)
-                        fire_late = trigger.late.should_fire(s["dyn"], "l", now_ms)
-                        if fire_late:
-                            trigger.late.on_fire(s["dyn"], "l")
-                    if fire_late:
-                        emit(s, "LATE", is_last=final_horizon)
-                        emitted_closing = final_horizon
-                if final_horizon:
-                    # Closing pane over merging windows: FIRE_ALWAYS
-                    # guarantees the session's final is_last pane at the
-                    # lateness horizon even when nothing new arrived;
-                    # default FIRE_IF_NON_EMPTY still fires when the pane
-                    # holds data no earlier firing emitted (late element
-                    # buffered by an unready late trigger) — Beam's
-                    # "final pane if there is new data since the last
-                    # firing" contract.
-                    if not emitted_closing and (
-                        closing_behavior == CLOSING_FIRE_ALWAYS or s["pane_n"]
-                    ):
-                        emit(s, "LATE", is_last=True)
-                else:
-                    keep.append(s)  # still refinable within lateness
-
-        # 4. persist / GC / wake-up
-        if keep:
-            state.update((json.dumps({"sessions": keep}),))
-            targets = []
-            for s in keep:
-                if not s["on_time_fired"]:
-                    targets.append(s["end"] - lateness_ms)  # spark clock
-                else:
-                    targets.append(s["end"])  # GC point on spark clock
-            state.setTimeoutTimestamp(max(min(targets), spark_wm + 1))
-        elif state.exists:
-            state.remove()
-
-        if panes:
-            yield pd.DataFrame(panes)
-
+    step = _trigger_step(keys, trigger, accumulation, lateness_ms, output_time,
+                         closing_behavior)
     return windowed.groupBy(*keys).applyInPandasWithState(
-        process,
+        _session_kernel(step, ts_col, _duration_ms(gap)),
         outputStructType=out_schema,
         stateStructType="sessions string",
         outputMode="update",

@@ -211,6 +211,30 @@ def test_stragglers_beyond_lateness_are_dropped(spark, harness):
     assert [p for p in _panes(out2) if p[0] == "2024-01-01 00:00:00"] == []
 
 
+def test_on_time_fires_when_key_is_called_at_exact_window_end(spark, harness):
+    """State is per key, so one call runs the trigger on all of the key's
+    windows. When the key is called for another window while the watermark
+    sits exactly on a window's end, that window fires its ON_TIME pane in
+    this batch: Beam's watermark has passed its maxTimestamp (end − 1 ms).
+    (The window's own timeout would fire only once Spark's watermark is
+    strictly past it.)"""
+    def build(stream):
+        return triggered_window_aggregate(
+            stream, keys=["key"], value_col="value", window_size="60 seconds",
+            trigger=AfterWatermark(), accumulation=ACCUMULATING,
+            watermark_delay="10 seconds",
+        )
+
+    # a@10 opens [0,60), a@70 opens [60,120) and moves the watermark to
+    # exactly 60 s: nothing has passed its end yet.
+    harness.feed(_batch(spark, [(1, 10, "a", 1), (2, 70, "a", 2)]))
+    assert harness.run_round(build, output_mode="update") == []
+    # a@65 lands in [60,120) and leaves the watermark at 60 s
+    harness.feed(_batch(spark, [(3, 65, "a", 4)]))
+    out = _panes(harness.run_round(build, output_mode="update"))
+    assert out == [("2024-01-01 00:00:00", "ON_TIME", 0, 1, 1.0, True, True)]
+
+
 def test_after_each_advances_through_subtriggers(spark, harness):
     """AfterEach.inOrder(count>=2, count>=3): first EARLY pane after 2
     elements, second after 3 MORE, then no further early panes."""
@@ -414,6 +438,33 @@ def test_session_kernel_early_firing_then_merge(spark, harness):
     assert r["pane_index"] >= 1  # pane index continued past the early pane
 
 
+def test_session_merge_keeps_processing_time_early_trigger(spark, harness):
+    """onMerge of trigger state: AfterProcessingTime's first-element stamp
+    takes the earliest of the merged sessions' stamps (Beam's
+    AfterDelayFromFirstElement combines with Min) — adding the two epoch
+    stamps would push the delay decades out and the early trigger would
+    never fire again after a merge."""
+    from dataflowjavasdk_spark.streaming.triggers import AfterProcessingTime, Repeatedly
+
+    def build(stream):
+        return triggered_session_aggregate(
+            stream, keys=["key"], value_col="value", gap="60 seconds",
+            trigger=AfterWatermark(early=Repeatedly(AfterProcessingTime(delay_ms=1))),
+            accumulation=ACCUMULATING, watermark_delay="600 seconds",
+        )
+
+    # two sessions [0,60) and [100,160), each stamped with this round's
+    # processing time; the 1 ms delay has not passed within the round
+    harness.feed(_batch(spark, [(1, 0, "a", 1), (2, 100, "a", 2)]))
+    assert harness.run_round(build, output_mode="update") == []
+    # a bridge at :50 merges them into [0,160): the delay from the first
+    # element has passed, so the merged session fires an EARLY pane
+    harness.feed(_batch(spark, [(3, 50, "a", 4)]))
+    out = [(r["pane_timing"], r["pane_index"], r["n"], r["total"], str(r["window_end"]))
+           for r in harness.run_round(build, output_mode="update")]
+    assert out == [("EARLY", 0, 3, 7.0, "2024-01-01 00:02:40")]
+
+
 def test_session_kernel_discarding_resets_after_early(spark, harness):
     trig = AfterWatermark(early=AfterCount(2))
     harness.feed(_batch(spark, [(1, 0, "a", 1), (2, 10, "a", 2)]))
@@ -527,16 +578,18 @@ def test_closing_fire_if_non_empty_flushes_buffered_late_data(spark, harness):
 
 def test_trigger_kernel_soak_state_bounded_by_lateness_horizon(spark):
     """Load pin (VERDICT r3 #7): 10k keys x overlapping sliding windows x
-    several micro-batches through the kernel — the state-blob count must
-    stay bounded by the lateness horizon (the Windmill bound SCALE.md
-    claims), i.e. closed windows' GroupState is actually GC'd instead of
-    accumulating round over round.
+    several micro-batches through the kernel — the open windows per key
+    must stay bounded by the lateness horizon (the Windmill bound SCALE.md
+    claims), i.e. closed windows are actually GC'd instead of accumulating
+    round over round.
 
-    Geometry: size 60s / period 30s -> every element lives in 2 windows;
-    rounds advance event time by 120s, so each round closes the previous
-    round's windows (end + 30s lateness < new watermark). Live cells per
-    key: <= 2 current + <= 2 awaiting the strictly-greater timeout tick
-    = 4; growth across rounds would mean a state leak."""
+    State is one row per key, so the row count cannot show a leak; the
+    test reads the state store back and counts the window cells in each
+    key's state. Geometry: size 60s / period 30s -> every element lives in
+    2 windows; rounds advance event time by 120s, so each round closes the
+    previous round's windows (end + 30s lateness < new watermark). Open
+    cells per key: <= 2 current + <= 2 awaiting their GC = 4; growth
+    across rounds would mean a state leak."""
     n_keys = 10_000
 
     def bulk(ts_sec):
@@ -561,21 +614,33 @@ def test_trigger_kernel_soak_state_bounded_by_lateness_horizon(spark):
             window_period="30 seconds",
         )
 
+    def open_cells(checkpoint):
+        """(max, total) window cells over the keys' state rows."""
+        cells = F.from_json(
+            "value.groupState.cells", "cells array<struct<start: long>>"
+        ).cells
+        return tuple(
+            spark.read.format("statestore").load(checkpoint)
+            .select(F.size(cells).alias("n"))
+            .agg(F.max("n"), F.sum("n"))
+            .first()
+        )
+
     h = SC.MicroBatchHarness(spark, SCHEMA)
     try:
-        state_per_round = []
+        cells_per_round = []
         emitted = 0
         for r in range(4):
             h.feed(bulk(120 * r))
             emitted += len(h.run_round(build, output_mode="update"))
-            assert h.state_rows is not None
-            state_per_round.append(h.state_rows)
+            assert h.state_rows == n_keys  # one state row per key
+            cells_per_round.append(open_cells(h.checkpoint))
         # Bounded by the horizon, every round.
-        for r, n in enumerate(state_per_round):
-            assert n <= 4 * n_keys, f"round {r}: {n} state rows (leak)"
-        # And flat, not growing: the last round holds no more state than
+        for r, (per_key, _) in enumerate(cells_per_round):
+            assert per_key <= 4, f"round {r}: {per_key} open windows in a key (leak)"
+        # And flat, not growing: the last round holds no more cells than
         # the first steady-state round.
-        assert state_per_round[-1] <= state_per_round[1], state_per_round
+        assert cells_per_round[-1][1] <= cells_per_round[1][1], cells_per_round
         # Sanity: the pipeline actually emitted panes at this scale.
         assert emitted >= 2 * n_keys
     finally:
